@@ -1,6 +1,8 @@
 """Minimal pure-Python PostgreSQL wire-protocol (v3) client with a DB-API
 face — just enough surface for the engine's DB sink path
-(:func:`ibc_spark.io_.sinks.dbapi_upsert`) to run against a REAL Postgres.
+(:func:`ibc_spark.io_.sinks.dbapi_upsert`) and its read-back
+(:func:`ibc_spark.io_.sources.pgwire_parallel_read`, one connection per
+slice task, rows returned as text) to run against a REAL Postgres.
 
 Why this exists: the sandbox ships a Postgres SERVER binary but no Python
 driver (pg8000/psycopg are absent and installs are off-limits), and
@@ -21,7 +23,9 @@ pair), ``:146-151`` (pg error 23505 → DataConflictError E001),
 Deliberately NOT a general driver: simple query protocol only (no
 Parse/Bind, no COPY, no TLS, no SCRAM — trust auth), parameters are
 client-side-formatted literals. Do not point it at untrusted data without
-reviewing :func:`_literal`.
+reviewing :func:`_literal`. Result sets are read in 64 KiB ``recv`` chunks
+into one ``bytearray`` cut by offset, so a large ``SELECT`` costs time
+linear in its size.
 """
 
 from __future__ import annotations
@@ -131,7 +135,11 @@ class PgWireConnection:
             self._sock.connect(f"{unix_socket_dir}/.s.PGSQL.{port}")
         else:
             self._sock = socket.create_connection((host, port), timeout=30)
-        self._buf = b""
+        # messages are cut from the buffer by offset; consumed bytes are
+        # dropped only when more must be received, so each recv chunk is
+        # copied O(1) times, not once per message cut from it
+        self._buf = bytearray()
+        self._pos = 0
         self._in_txn = False
         body = b"user\x00" + user.encode() + b"\x00database\x00" + database.encode() + b"\x00\x00"
         payload = struct.pack("!ii", 8 + len(body), 196608) + body  # protocol 3.0
@@ -140,13 +148,17 @@ class PgWireConnection:
 
     # -- frame plumbing ----------------------------------------------------
     def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
+        buf, pos = self._buf, self._pos
+        while len(buf) - pos < n:
             chunk = self._sock.recv(65536)
             if not chunk:
                 raise ConnectionError("server closed connection")
-            self._buf += chunk
-        out, self._buf = self._buf[:n], self._buf[n:]
-        return out
+            if pos:
+                del buf[:pos]
+                pos = 0
+            buf += chunk
+        self._pos = pos + n
+        return bytes(buf[pos : pos + n])
 
     def _read_msg(self) -> tuple[bytes, bytes]:
         mtype = self._read_exact(1)

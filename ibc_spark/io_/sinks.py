@@ -143,7 +143,11 @@ def dbapi_upsert(
     connection — it runs on the EXECUTOR, so credentials/config must be
     baked into it (same contract as ``foreachBatch`` JDBC writers). Rows that
     still violate a constraint inside a batch (NOT NULL, CHECK, FK …) are
-    retried row-at-a-time; persistent offenders are written to
+    found by bisecting the failing batch — each half retried under its own
+    savepoint, left to right, down to single rows — so the final table and
+    quarantine match a row-at-a-time retry, while one offender costs about
+    ``log2(batch_size)`` retried chunks instead of ``batch_size`` retried
+    rows; rows that fail on their own are written to
     ``quarantine_table`` ``(error_code, reason, source_row)`` as E001 —
     quarantine-as-data, never a failed job — or re-raised as
     ``DataConflictError`` when no quarantine table is configured.
@@ -157,10 +161,10 @@ def dbapi_upsert(
     downstream on a hash of ``source_row`` if exactly-once quarantine
     accounting matters, or add a unique index on the quarantine table.
 
-    ``savepoints`` guards the batch and each row-retry with
+    ``savepoints`` guards the batch and each bisected retry with
     SAVEPOINT/ROLLBACK TO — required on engines (Postgres) where any
     statement error aborts the enclosing transaction, making a plain
-    row-at-a-time retry impossible; SQLite accepts the same syntax. Disable
+    retry impossible; SQLite accepts the same syntax. Disable
     only for DB-API targets without savepoint support.
     """
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
@@ -194,37 +198,49 @@ def dbapi_upsert(
             cur = conn.cursor()
             batch: list[tuple] = []
 
-            def flush() -> None:
-                if not batch:
-                    return
+            def attempt(chunk: list[tuple]) -> Exception | None:
                 if savepoints:
                     cur.execute("SAVEPOINT ibc_flush")
                 try:
-                    cur.executemany(sql, batch)
-                    if savepoints:
-                        cur.execute("RELEASE SAVEPOINT ibc_flush")
-                except Exception:
-                    # isolate offenders without losing the good rows; on
-                    # engines that abort the transaction on error (Postgres)
-                    # the savepoint rollback is what makes the retry legal
+                    cur.executemany(sql, chunk)
+                except Exception as err:
+                    # on engines that abort the transaction on error
+                    # (Postgres) the savepoint rollback is what makes the
+                    # retry legal
                     if savepoints:
                         cur.execute("ROLLBACK TO SAVEPOINT ibc_flush")
-                    for params in batch:
-                        if savepoints:
-                            cur.execute("SAVEPOINT ibc_row")
-                        try:
-                            cur.execute(sql, params)
-                            if savepoints:
-                                cur.execute("RELEASE SAVEPOINT ibc_row")
-                        except Exception as row_err:
-                            if savepoints:
-                                cur.execute("ROLLBACK TO SAVEPOINT ibc_row")
-                            payload = json.dumps(dict(zip(cols, params)), default=str)
-                            if q_sql is None:
-                                raise DataConflictError(
-                                    f"constraint violation writing {table}: {row_err}"
-                                ) from row_err
-                            cur.execute(q_sql, (E_DATA_CONFLICT, str(row_err), payload))
+                    return err
+                if savepoints:
+                    cur.execute("RELEASE SAVEPOINT ibc_flush")
+                return None
+
+            def write(chunk: list[tuple], known_bad: bool = False) -> bool:
+                # True when every row of ``chunk`` landed. A failing chunk
+                # is rolled back and bisected, halves left to right, so only
+                # a row that fails on its own is quarantined: the same final
+                # state as retrying each row alone. When the left half of a
+                # failing chunk lands whole, the offender is in the right
+                # half, which is then split without being tried whole.
+                if not known_bad or len(chunk) == 1:
+                    err = attempt(chunk)
+                    if err is None:
+                        return True
+                    if len(chunk) == 1:
+                        if q_sql is None:
+                            raise DataConflictError(
+                                f"constraint violation writing {table}: {err}"
+                            ) from err
+                        payload = json.dumps(dict(zip(cols, chunk[0])), default=str)
+                        cur.execute(q_sql, (E_DATA_CONFLICT, str(err), payload))
+                        return False
+                mid = len(chunk) // 2
+                left_ok = write(chunk[:mid])
+                write(chunk[mid:], known_bad=left_ok)
+                return False
+
+            def flush() -> None:
+                if batch:
+                    write(batch)
                 batch.clear()
 
             import itertools

@@ -1,5 +1,7 @@
 """Fixture builders per FIXTURES.md — sheet-shaped rows exercising every
-reference branch, plus sink-state frames."""
+reference branch, plus sink-state frames. Every frame is built through
+:func:`dataframe_from_rows` (an Arrow ``LocalTableScan``), so the
+pipelines' plans over these fixtures hold no ``parallelize`` scan."""
 
 from __future__ import annotations
 
@@ -66,6 +68,11 @@ def roster_rows() -> list[dict]:
     ]
 
 
+def _state(spark: SparkSession, rows: list[tuple], schema: T.StructType):
+    names = schema.fieldNames()
+    return dataframe_from_rows(spark, [dict(zip(names, r)) for r in rows], schema)
+
+
 def users_state(spark: SparkSession):
     rows = [
         (100, "Bob Original", "bob@x.edu", None, None, True, False, False, "NC", "bob1"),
@@ -74,7 +81,7 @@ def users_state(spark: SparkSession):
         (103, "Finn F", "finn@x.edu", None, None, False, False, False, "EM", "finn1"),
         (104, "Gail G", "gail@x.edu", None, None, False, False, False, "NC", "gail1"),
     ]
-    return spark.createDataFrame(rows, USERS_SCHEMA)
+    return _state(spark, rows, USERS_SCHEMA)
 
 
 def consultants_state(spark: SparkSession):
@@ -89,7 +96,7 @@ def consultants_state(spark: SparkSession):
         (104, "Soph", "CS", None, None, "6", 1, None, None, None, None, "New", False)
         + (zeros,) * 7,
     ]
-    return spark.createDataFrame(rows, CONSULTANTS_SCHEMA)
+    return _state(spark, rows, CONSULTANTS_SCHEMA)
 
 
 def projects_state(spark: SparkSession):
@@ -97,7 +104,7 @@ def projects_state(spark: SparkSession):
         (9000, "Existing Project", "SP26", "ACME", 103, 101, 102, None, None),
         (9001, "Changed Project", "SP26", "OldCo", 103, None, None, None, None),
     ]
-    return spark.createDataFrame(rows, PROJECTS_SCHEMA)
+    return _state(spark, rows, PROJECTS_SCHEMA)
 
 
 def project_rows() -> list[dict]:

@@ -4,6 +4,7 @@ SQLite: insert, keyed upsert, constraint violation -> E001 quarantine rows."""
 from __future__ import annotations
 
 import functools
+import json
 import sqlite3
 
 import pytest
@@ -291,3 +292,74 @@ def test_pg_discipline_requires_savepoints(spark, db):
             quarantine_table="users__quarantine",
             savepoints=False,
         )
+
+
+def upsert_one_row_at_a_time(conn, table, cols, key_cols, rows, quarantine_table,
+                             paramstyle="qmark"):
+    """Reference for ``dbapi_upsert``'s retry: every row alone under its own
+    savepoint, each failure quarantined as E001 — the final table and
+    quarantine the bisecting retry must reproduce."""
+    ph = "?" if paramstyle == "qmark" else "%s"
+    sql = upsert_sql(table, cols, key_cols, paramstyle=paramstyle)
+    q_sql = (f'INSERT INTO "{quarantine_table}" (error_code, reason, source_row) '
+             f"VALUES ({ph}, {ph}, {ph})")
+    cur = conn.cursor()
+    for params in rows:
+        cur.execute("SAVEPOINT ref_row")
+        try:
+            cur.execute(sql, params)
+            cur.execute("RELEASE SAVEPOINT ref_row")
+        except Exception as err:
+            cur.execute("ROLLBACK TO SAVEPOINT ref_row")
+            payload = json.dumps(dict(zip(cols, params)), default=str)
+            cur.execute(q_sql, ("E001", str(err), payload))
+    conn.commit()
+
+
+#: One batch-size-4 run through every retry shape: a key repeated inside a
+#: batch (once landing, once failing), two NEW rows conflicting on the
+#: UNIQUE email, NOT NULL offenders, batches with zero, one and two bad rows.
+TRICKY_ROWS = [
+    (1, "a@x.edu", "A"), (2, "b@x.edu", None), (3, "c@x.edu", "C"), (3, "c@x.edu", "C2"),
+    (4, "d@x.edu", "D"), (5, "d@x.edu", "E"), (6, "f@x.edu", "F"), (4, "d@x.edu", None),
+    (7, "g@x.edu", "G"), (8, "h@x.edu", "H"), (9, "i@x.edu", "I"), (10, "j@x.edu", "J"),
+    (11, "a@x.edu", "K"), (12, "k@x.edu", None), (3, "c@x.edu", "C3"),
+]
+
+
+def test_bisecting_retry_matches_one_row_at_a_time(spark, tmp_path):
+    """Under Postgres abort discipline, the bisecting retry leaves exactly
+    the table and quarantine rows (same order, same reasons) that retrying
+    every row alone does."""
+    cols = ["user_id", "email", "name"]
+    results = []
+    for run in ("bisect", "reference"):
+        path = str(tmp_path / f"{run}.db")
+        conn = sqlite3.connect(path)
+        conn.executescript(DDL)
+        conn.execute("INSERT INTO users VALUES (1, 'a@x.edu', 'A0')")
+        conn.commit()
+        conn.close()
+        if run == "bisect":
+            df = spark.createDataFrame(
+                TRICKY_ROWS, "user_id long, email string, name string"
+            ).coalesce(1)
+            dbapi_upsert(
+                df, table="users", key_cols="user_id", batch_size=4,
+                connection_factory=functools.partial(_FakePgConnection, path),
+                quarantine_table="users__quarantine",
+            )
+        else:
+            conn = _FakePgConnection(path)
+            upsert_one_row_at_a_time(
+                conn, "users", cols, ["user_id"], TRICKY_ROWS, "users__quarantine"
+            )
+            conn.close()
+        results.append((
+            fetchall(path, "SELECT * FROM users ORDER BY user_id"),
+            fetchall(path, "SELECT * FROM users__quarantine ORDER BY rowid"),
+        ))
+    assert results[0] == results[1]
+    table, quarantine = results[0]
+    assert [r[0] for r in table] == [1, 3, 4, 6, 7, 8, 9, 10]
+    assert [json.loads(r[2])["user_id"] for r in quarantine] == [2, 5, 4, 11, 12]

@@ -530,3 +530,35 @@ def test_bucketed_join_runs_with_zero_join_shuffle(spark):
         assert not m.group(1).startswith(("o_custkey", "c_custkey")), plan
     # exactly one exchange total (the c_mktsegment aggregation)
     assert n_nodes(plan, "Exchange") == 1
+
+
+def test_pipelines_over_fixtures_scan_no_existing_rdd(spark):
+    """E1, E2 and E3 over the fixture sheets and states run on Arrow
+    LocalTableScans: no executed plan holds an ``ExistingRDD`` scan, the
+    shape a ``parallelize``-based ingest compiles to (one Python task per
+    partition on every scan)."""
+    from ibc_spark.pipelines import end_semester, projects, staffing_roster
+    from tests import fixtures
+
+    e1 = staffing_roster.run(
+        fixtures.roster_df(spark), fixtures.users_state(spark),
+        fixtures.consultants_state(spark),
+    )
+    e2 = projects.run(
+        fixtures.projects_df(spark), fixtures.users_state(spark),
+        fixtures.consultants_state(spark), fixtures.projects_state(spark),
+    )
+    e3 = end_semester.run(fixtures.consultants_state(spark))
+    outputs = {
+        "e1.users": e1.users, "e1.consultants": e1.consultants,
+        "e1.quarantine": e1.quarantine, "e1.metrics": e1.metrics,
+        "e2.projects": e2.projects, "e2.users": e2.users,
+        "e2.consultants": e2.consultants, "e2.links": e2.links,
+        "e2.quarantine": e2.quarantine, "e2.metrics": e2.metrics,
+        "e3.consultants": e3.consultants, "e3.metrics": e3.metrics,
+    }
+    for name, df in outputs.items():
+        df.collect()  # AQE settles the executed plan
+        plan = plan_of(df)
+        assert "LocalTableScan" in plan, (name, plan)
+        assert "ExistingRDD" not in plan, (name, plan)

@@ -78,13 +78,106 @@ def test_jdbc_reader_requires_bounds(spark):
     assert r is not None
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_dataframe_from_rows_union_schema(spark):
     df = dataframe_from_rows(
         spark, [{"a": 1, "b": "x"}, {"b": "y", "c": 3.5}]
     )
-    assert set(df.columns) == {"a", "b", "c"}
-    got = {r["b"]: (r["a"], r["c"]) for r in df.collect()}
-    assert got == {"x": ("1", None), "y": (None, "3.5")}
+    # union of keys in first-seen order, all STRING, missing keys NULL
+    assert df.columns == ["a", "b", "c"]
+    assert all(t == "string" for _, t in df.dtypes)
+    assert [tuple(r) for r in df.collect()] == [("1", "x", None), (None, "y", "3.5")]
+
+
+def test_dataframe_from_rows_is_local_table_scan(spark):
+    """The sheet frame is an Arrow LocalTableScan with real size statistics:
+    scanning it runs no parallelize / Python-RDD task."""
+    df = dataframe_from_rows(spark, [{"a": str(i)} for i in range(100)])
+    plan = _executed_plan(df)
+    assert plan.lstrip().startswith("LocalTableScan"), plan
+    assert "ExistingRDD" not in plan
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert 0 < int(size) < 1 << 20
+
+
+def test_dataframe_from_rows_stringifies_like_str(spark):
+    import datetime as dt
+    import decimal
+
+    values = [7, -2.5, 1e20, True, False, [1, "x"], {"k": 1}, dt.date(2026, 1, 2),
+              decimal.Decimal("1.10"), "  kept  ", ""]
+    df = dataframe_from_rows(spark, [{"v": v} for v in values] + [{"v": None}])
+    assert [r["v"] for r in df.collect()] == [str(v) for v in values] + [None]
+
+
+def test_dataframe_from_rows_explicit_typed_schema(spark):
+    import datetime as dt
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("score", T.DoubleType()),
+            T.StructField("ok", T.BooleanType()),
+            T.StructField("day", T.DateType()),
+            T.StructField("label", T.StringType()),
+        ]
+    )
+    rows = [
+        {"id": 1, "score": 0.5, "ok": True, "day": dt.date(2026, 3, 1), "label": 5},
+        {"id": 2, "extra": "dropped"},  # missing keys NULL, unknown key ignored
+    ]
+    df = dataframe_from_rows(spark, rows, schema)
+    assert df.schema == schema
+    assert [tuple(r) for r in df.collect()] == [
+        (1, 0.5, True, dt.date(2026, 3, 1), "5"),  # STRING field still stringified
+        (2, None, None, None, None),
+    ]
+    with pytest.raises(Exception):  # typed fields are not coerced
+        dataframe_from_rows(spark, [{"id": "not a number"}], schema)
+
+
+def test_dataframe_from_rows_empty(spark):
+    df = dataframe_from_rows(spark, [])
+    assert df.columns == [] and df.count() == 0
+    typed = dataframe_from_rows(spark, [], SCHEMA)
+    assert typed.schema == SCHEMA and typed.collect() == []
+
+
+def test_dataframe_from_rows_keeps_order_across_arrow_batches(spark):
+    """Several Arrow batches (7 rows each) still scan in input order, so
+    ``monotonically_increasing_id`` ranks rows as the sheet listed them and
+    E1's duplicate-email last-write-wins and metrics are unchanged."""
+    from tests import fixtures
+
+    from ibc_spark.pipelines import staffing_roster
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        rows = [{"i": str(i), "v": f"r{i}"} for i in range(50)]
+        df = dataframe_from_rows(spark, rows)
+        assert df.rdd.getNumPartitions() > 1
+        ranked = df.withColumn("o", F.monotonically_increasing_id()).orderBy("o")
+        assert [r["i"] for r in ranked.collect()] == [str(i) for i in range(50)]
+
+        # 2-row batches put the two alice@x.edu rows (0 and 3) in
+        # different batches
+        spark.conf.set(key, "2")
+        res = staffing_roster.run(
+            fixtures.roster_df(spark),
+            fixtures.users_state(spark),
+            fixtures.consultants_state(spark),
+        )
+        m = res.metrics.collect()[0]
+        assert (m["valid_rows"], m["invalid_rows"]) == (2, 2)
+        alice = [r for r in res.users.collect() if r["email"] == "alice@x.edu"]
+        assert [(r["name"], r["curr_role"]) for r in alice] == [("Alice A2", "SC")]
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_orc_roundtrip_pushdown(spark, tmp_path):
